@@ -2,9 +2,10 @@
 
 Reference trace (SURVEY.md §3 EP1): watermark probe → scrape from
 watermark → transform → upsert — four Airflow tasks crossing
-JSON-over-Postgres between each. Here it is one lazy Spark lineage with
-exactly two materialization points: the scalar watermark probe and the
-partition-pruned gold write.
+JSON-over-Postgres between each. Here it is one Spark lineage evaluated
+at three points: the scalar watermark probe, the silver batch (computed
+once, with its row count and touched partitions observed on the same
+job), and the gold write or partition-pruned merge.
 
 Idempotence contract (reference achieves it via ON CONFLICT): running the
 same batch twice leaves the gold table unchanged — property-tested in
@@ -15,7 +16,8 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_tech_jobs_data_pipeline_spark import pipeline
@@ -54,15 +56,16 @@ def run_incremental(
     upsert. Returns the number of rows merged (0 ⇒ the O4 short-circuit:
     nothing written, schema untouched)."""
     try:
-        gold = spark.read.parquet(gold_path)
+        gold = sink.read_gold(spark, gold_path)
+    except AnalysisException:  # first run: no gold yet
+        wm = now - dt.timedelta(days=fallback_days)
+        bootstrap = True
+    else:
         wm = watermark_lower_bound(
             gold, "created_datetime", now=now,
             lookback_days=lookback_days, fallback_days=fallback_days,
         )
         bootstrap = False
-    except Exception:  # noqa: BLE001 — first run: no gold yet
-        wm = now - dt.timedelta(days=fallback_days)
-        bootstrap = True
 
     fresh = raw.filter(F.col("created_datetime") >= F.lit(wm))
     silver = pipeline.transform(fresh).withColumn("ingest_ts", F.lit(now))
@@ -74,11 +77,22 @@ def run_incremental(
         "salary_currency", "lower_salary", "upper_salary", "job_position",
         "location", "field", "technologies", "ingest_ts",
     )
-    n = silver.count()
-    if n == 0:
+    # the batch (dedup shuffle + enrichment) is evaluated once; its row
+    # count and touched partitions ride that job
+    obs = Observation()
+    day = F.col(sink.PARTITION_COL)
+    silver = sink.with_partition_col(silver).observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.collect_set(day).alias("days"),
+        F.count_if(day.isNull()).alias("nulls"),
+    ).localCheckpoint()
+    stats = obs.get
+    if stats["n"] == 0:
         return 0
     if bootstrap:
         sink.write_gold(silver, gold_path)
     else:
-        sink.upsert_gold(spark, gold_path, silver)
-    return n
+        touched = stats["days"] + ([None] if stats["nulls"] else [])
+        sink.upsert_gold(spark, gold_path, silver, touched=touched)
+    return stats["n"]

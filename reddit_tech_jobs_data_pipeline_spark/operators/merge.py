@@ -10,9 +10,9 @@ implements upsert as a deterministic last-writer-wins rewrite:
 
 Scale notes (100 TB): the window is a single hash shuffle on the merge
 key — the same shuffle a MERGE join would need. For a date-partitioned
-gold table, pair this with dynamic partition overwrite so only partitions
-containing updated keys rewrite (see ``upsert_partitioned``); never rewrite
-100 TB to merge a daily batch.
+gold table, merge only the partitions the batch touches and swap just
+those in (see ``sources.sink.upsert_gold``); never rewrite 100 TB to merge
+a daily batch.
 """
 
 from __future__ import annotations
@@ -51,41 +51,6 @@ def merge_upsert(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__is_new")
     )
-
-
-def upsert_partitioned(
-    spark_table_path: str,
-    new: DataFrame,
-    keys: Sequence[str],
-    version_col: str,
-    partition_col: str,
-) -> None:
-    """Partition-pruned upsert into a date-partitioned parquet table.
-
-    Reads back ONLY the partitions that the incoming batch touches
-    (partition pruning on ``partition_col``), merges, and rewrites just
-    those partitions via dynamic partition overwrite. At 100 TB this is
-    the difference between rewriting ~1 day and rewriting the table.
-    """
-    spark = new.sparkSession
-    touched = [r[0] for r in new.select(partition_col).distinct().collect()]
-    old = spark.read.parquet(spark_table_path).filter(F.col(partition_col).isin(touched))
-    merged = merge_upsert(old, new, keys, version_col)
-    # stage-then-swap: never overwrite a path the same plan still reads
-    # (file deletion would race the lazy scan)
-    staging = spark_table_path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    (
-        spark.read.parquet(staging)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(spark_table_path)
-    )
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
-    spark.catalog.refreshByPath(spark_table_path)
 
 
 def watermark_lower_bound(

@@ -54,8 +54,8 @@ def test_purge_missing_keys_is_noop(spark, tmp_path):
 
 
 def test_purge_entire_partition_deletes_its_directory(spark, tmp_path):
-    # ALL of day-1's rows purged plus one day-2 row: dynamic partition
-    # overwrite alone would leave the emptied day-1 partition behind —
+    # ALL of day-1's rows purged plus one day-2 row: swapping in the
+    # staged partitions alone would leave the emptied day-1 partition behind —
     # purge_keys must delete its directory explicitly
     path = str(tmp_path / "gold")
     sink.write_gold(_posts(spark, 1).unionByName(_posts(spark, 2)), path)
@@ -67,7 +67,7 @@ def test_purge_entire_partition_deletes_its_directory(spark, tmp_path):
     out = spark.read.parquet(path)
     assert {r.post_id for r in out.select("post_id").collect()} == {"t3_2_0", "t3_2_2"}
     assert not os.path.exists(os.path.join(path, "created_date=2024-01-01"))
-    assert not os.path.exists(path + "__purge_staging")
+    assert not os.path.exists(path + "__staging")
 
 
 def test_purge_every_partition_empties_table(spark, tmp_path):

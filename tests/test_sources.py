@@ -110,7 +110,7 @@ class TestGoldSink:
         assert [r.lower_salary for r in day1] == [999.0]
         day2 = out.filter(F.col("created_date") == "2024-01-02").select("lower_salary").distinct().collect()
         assert [r.lower_salary for r in day2] == [200.0]
-        # dynamic overwrite left the day-2 partition untouched on disk
+        # the partition swap left the day-2 partition untouched on disk
         assert os.path.getmtime(os.path.join(path, "created_date=2024-01-02")) == mtime_day2
 
 
